@@ -861,18 +861,17 @@ object ColumnarEngine {
       .map(Manifests.loadChunkIndex(planConf, outDir, _))
       .flatMap { m =>
         val file = m.blockFile(outDir)
-        if (m.chunkIndex.isEmpty) Seq((file, Seq.empty[ChunkStats]))
-        else m.chunkIndex.map(cs => (file, Seq(cs)))
+        if (m.chunkIndex.isEmpty) Seq((file, Seq.empty[ChunkSpec]))
+        else m.chunkIndex.map(cs => (file, Seq(ChunkSpec.of(cs))))
       }
-    val neededL = longColumns.toSet
-    val neededS = stringColumns.toSet
+    val columns = DefaultSchema.map(s => (s.name, s.kind))
     // parallelize places exactly one chunk task per partition WITHOUT
     // an exchange (createDataset + repartition paid a full shuffle
     // stage of the task descriptors on every decode job — measured
     // ~0.1 s/job of pure scheduling at n=8)
     val rdd = spark.sparkContext
       .parallelize(tasks, math.max(tasks.size, 1))
-      .flatMap { case (file, chunkIndex) =>
+      .flatMap { case (file, ranges) =>
         val conf = ContainerIO.confFrom(confKv)
         val fs = ContainerIO.fs(file, conf)
         val p = new org.apache.hadoop.fs.Path(file)
@@ -880,21 +879,8 @@ object ColumnarEngine {
         val in = fs.open(p)
         Option(TaskContext.get()).foreach(
           _.addTaskCompletionListener[Unit](_ => in.close()))
-        val chunks: Iterator[DecodedChunk] =
-          if (chunkIndex.nonEmpty) chunkIndex.iterator.map { cs =>
-            val ci = new ContainerInput(in, cs.offset, cs.offset + cs.length)
-            ContainerFormat.readChunk(ci, neededL, neededS, cs.blockCrcs)
-          } else {
-            val ci = new ContainerInput(in, 0L, fileLen)
-            ContainerFormat.readPrelude(ci)
-            new Iterator[DecodedChunk] {
-              override def hasNext: Boolean = !ci.atEnd
-              override def next(): DecodedChunk =
-                ContainerFormat.readChunk(ci, neededL, neededS, Map.empty)
-            }
-          }
-        chunks.flatMap { chunk =>
-          ContainerFormat.verifyContentDigest(chunk)
+        ContainerFormat.readChunks(in, fileLen, file, ranges, columns,
+            "content").flatMap { chunk =>
           val longs = chunk.longs
           // typed rows need Java Strings: materialize each column once
           val repo = chunk.strs.get("repo").strings

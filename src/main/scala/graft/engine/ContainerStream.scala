@@ -156,9 +156,16 @@ private[graft] final case class DecodedChunk(
   }
 }
 
-/** Shared streaming parse of the container format (prelude + chunks),
-  * used by the row and columnar DSv2 readers. Mirrors the validation caps
-  * of [[ColumnarEngine.decodeContainer]].
+/** One chunk's read plan: byte range + expected block CRCs. */
+case class ChunkSpec(offset: Long, length: Long, rows: Int,
+                     crcs: Map[String, Long])
+
+object ChunkSpec {
+  def of(c: ChunkStats): ChunkSpec = ChunkSpec(c.offset, c.length, c.rows, c.blockCrcs)
+}
+
+/** Shared streaming parse of the container format (prelude + chunks).
+  * Mirrors the validation caps of [[ColumnarEngine.decodeContainer]].
   */
 private[graft] object ContainerFormat {
 
@@ -178,6 +185,23 @@ private[graft] object ContainerFormat {
     require(java.util.Arrays.equals(magic, ColumnarEngine.Magic),
       "bad container magic")
     ci.readVarint()
+  }
+
+  /** The [[DecodedChunk]] map ("lane") a column kind decodes into — the
+    * routing [[readChunk]]'s dispatch below implements.
+    */
+  final val LongLane = 0
+  final val StrLane = 1
+  final val IntLane = 2
+  final val DblLane = 3
+  final val FltLane = 4
+  def laneOf(kind: Int): Int = kind match {
+    case 0 | 3 | 8 => LongLane
+    case 1 | 6 => StrLane
+    case 2 | 4 | 9 | 10 => IntLane
+    case 5 => DblLane
+    case 7 => FltLane
+    case k => throw new IllegalArgumentException(s"unknown column kind $k")
   }
 
   /** Parse one chunk starting at the cursor. Non-needed column blocks are
@@ -310,6 +334,42 @@ private[graft] object ContainerFormat {
       require(a != null && a.n == n, s"container missing/short float-array column $col")
     }
     DecodedChunk(n, longs, strs, digest, ints, dbls, nulls, flts)
+  }
+
+  /** Decode the chunks of one open container `file` of `fileLen` bytes:
+    * the indexed `ranges` in order, or — when empty (legacy manifests
+    * without a chunk index) — every chunk of a sequential whole-file
+    * stream. `columns` are the (stored name, kind) pairs to decode; every
+    * other block is a position advance. An indexed range must lie inside
+    * the file, parse to exactly its length, and hold exactly its indexed
+    * row count. A non-empty `digestCol` (one of `columns`) has every
+    * chunk's content digest verified.
+    */
+  def readChunks(in: FSDataInputStream, fileLen: Long, file: String,
+                 ranges: Seq[ChunkSpec], columns: Seq[(String, Int)],
+                 digestCol: String): Iterator[DecodedChunk] = {
+    def lane(l: Int): Set[String] =
+      columns.collect { case (n, k) if laneOf(k) == l => n }.toSet
+    val (longs, strs, ints, dbls, flts) =
+      (lane(LongLane), lane(StrLane), lane(IntLane), lane(DblLane), lane(FltLane))
+    def read(ci: ContainerInput, crcs: Map[String, Long]): DecodedChunk =
+      readChunk(ci, longs, strs, crcs, ints, dbls, flts)
+    val raw: Iterator[DecodedChunk] =
+      if (ranges.nonEmpty) ranges.iterator.map { cs =>
+        require(cs.offset >= 0 && cs.length >= 0 && cs.offset + cs.length <= fileLen,
+          s"chunk range [${cs.offset}, +${cs.length}) overruns $file ($fileLen bytes)")
+        val ci = new ContainerInput(in, cs.offset, cs.offset + cs.length)
+        val chunk = read(ci, cs.crcs)
+        require(ci.atEnd, s"chunk at ${cs.offset} shorter than its indexed length")
+        require(chunk.rows == cs.rows, s"chunk at ${cs.offset} row count mismatch")
+        chunk
+      } else {
+        val ci = new ContainerInput(in, 0L, fileLen)
+        readPrelude(ci)
+        Iterator.continually(ci).takeWhile(!_.atEnd).map(read(_, Map.empty))
+      }
+    if (digestCol.isEmpty) raw
+    else raw.map { c => verifyContentDigest(c, digestCol); c }
   }
 
   /** Recompute the chunk's per-row digest-column sha256 digest and

@@ -15,7 +15,7 @@ import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
 
-import graft.engine.{ChunkStats, ColumnarEngine, ContainerFormat, ContainerInput, ContainerIO, DecodedChunk, DerivedRow, Manifests, ParsedManifest}
+import graft.engine.{ChunkSpec, ChunkStats, ColumnarEngine, ColumnSpec, ContainerFormat, ContainerIO, DecodedChunk, DerivedRow, Manifests, ParsedManifest}
 
 /** `spark.read.format("graft")` / `df.write.format("graft")` — the
   * engine's container+manifest layout as a DataSource V2 table.
@@ -277,31 +277,6 @@ object GraftDataSource {
     if (ms.isEmpty) None else Some(currentSpecsOf(ms))
   }
 
-  private[sources] val longCols = ColumnarEngine.longColumns.toSet
-  private[sources] val strCols = ColumnarEngine.stringColumns.toSet
-
-  // classification is by PHYSICAL representation: TIMESTAMP_NTZ columns
-  // decode into the per-chunk long arrays (micros), DATE columns into
-  // the int arrays (days), DECIMAL into the long arrays (unscaled), and
-  // BOOLEAN into the int arrays (0/1) — each rides its lane's reader path
-  private[sources] def longColsOf(st: StructType): Set[String] =
-    st.fields.collect {
-      case f if f.dataType == LongType || f.dataType == TimestampNTZType ||
-        f.dataType.isInstanceOf[DecimalType] => f.name
-    }.toSet
-
-  /** DECIMAL columns and their scales — filter-constant translation
-    * (logical BigDecimal -> stored unscaled long) needs the scale.
-    */
-  private[sources] def decScaleOf(st: StructType): Map[String, Int] =
-    st.fields.collect {
-      case f if f.dataType.isInstanceOf[DecimalType] =>
-        f.name -> f.dataType.asInstanceOf[DecimalType].scale
-    }.toMap
-
-  private[sources] def boolColsOf(st: StructType): Set[String] =
-    st.fields.collect { case f if f.dataType == BooleanType => f.name }.toSet
-
   /** Rewrite pushed filters on DECIMAL/BOOLEAN columns into their
     * PHYSICAL form (unscaled-long / 0-1 int constants) so every
     * downstream stage — zone-map admission, chunk pruning, row-level
@@ -322,8 +297,12 @@ object GraftDataSource {
     * (unpushed — Spark evaluates them residually), mirroring kind 5.
     */
   private[sources] def translateFilters(filters: Array[Filter],
-      decScale: Map[String, Int], boolCols: Set[String],
-      f32Cols: Set[String] = Set.empty): Array[Filter] = {
+      specs: Seq[ColumnSpec]): Array[Filter] = {
+    // DECIMAL (kind 8) constants rescale at the column's scale; BOOLEAN
+    // (kind 9) and scalar FLOAT (kind 10) map to their stored ints
+    val decScale = specs.collect { case s if s.kind == 8 => s.name -> s.scale }.toMap
+    val boolCols = specs.collect { case s if s.kind == 9 => s.name }.toSet
+    val f32Cols = specs.collect { case s if s.kind == 10 => s.name }.toSet
     def f32(f: Float): java.lang.Integer =
       java.lang.Integer.valueOf(graft.codecs.FloatBits.toSortableInt(f))
     // the inclusive sortable range SQL considers EQUAL to the constant
@@ -384,35 +363,6 @@ object GraftDataSource {
       } catch { case _: ArithmeticException => f } // out-of-long constant
     filters.map(tr)
   }
-  /** String AND binary columns: kind 6 decodes into the same byte-slice
-    * column shape (a pushed string constant can never reach a binary
-    * column — Spark types the filters — so sharing the needed-set is
-    * safe and saves a fourth plumbing lane).
-    */
-  private[sources] def strColsOf(st: StructType): Set[String] =
-    st.fields.collect {
-      case f if f.dataType == StringType || f.dataType == BinaryType => f.name
-    }.toSet
-  private[sources] def fltColsOf(st: StructType): Set[String] =
-    st.fields.collect {
-      case f if f.dataType == ArrayType(FloatType, containsNull = false) ||
-        f.dataType == ArrayType(FloatType, containsNull = true) => f.name
-    }.toSet
-  private[sources] def intColsOf(st: StructType): Set[String] =
-    st.fields.collect {
-      case f if f.dataType == IntegerType || f.dataType == DateType ||
-        f.dataType == BooleanType || f.dataType == FloatType => f.name
-    }.toSet
-
-  /** Scalar FLOAT columns (kind 10): pushed Float constants pre-translate
-    * to their order-preserving sortable-int storage form.
-    */
-  private[sources] def f32ColsOf(st: StructType): Set[String] =
-    st.fields.collect { case f if f.dataType == FloatType => f.name }.toSet
-  private[sources] def dblColsOf(st: StructType): Set[String] =
-    st.fields.collect { case f if f.dataType == DoubleType => f.name }.toSet
-  private[sources] def nullableColsOf(st: StructType): Set[String] =
-    st.fields.collect { case f if f.nullable => f.name }.toSet
 
   /** Physical value of a pushed temporal filter constant: TIMESTAMP_NTZ
     * constants arrive as [[java.time.LocalDateTime]] (micros since epoch
@@ -592,60 +542,63 @@ object GraftDataSource {
     * Spark ordering (greater than everything, equal to itself) diverges
     * from both IEEE and the sortable mapping's tail; they stay in Spark.
     * IsNotNull/IsNull prune whole chunks via per-chunk null counts and
-    * re-check against the validity bitmaps.
+    * re-check against the validity bitmaps. Which checks apply is the
+    * column's decode lane ([[ContainerFormat.laneOf]]) in `specs`.
     */
-  private[sources] def pushable(f: Filter, longCols: Set[String],
-                                strCols: Set[String],
-                                intCols: Set[String] = Set.empty,
-                                dblCols: Set[String] = Set.empty,
-                                fltCols: Set[String] = Set.empty): Boolean = f match {
-    case EqualTo(c, x: java.lang.Double) => dblCols(c) && !x.isNaN
-    case GreaterThan(c, x: java.lang.Double) => dblCols(c) && !x.isNaN
-    case GreaterThanOrEqual(c, x: java.lang.Double) => dblCols(c) && !x.isNaN
-    case LessThan(c, x: java.lang.Double) => dblCols(c) && !x.isNaN
-    case LessThanOrEqual(c, x: java.lang.Double) => dblCols(c) && !x.isNaN
-    case In(c, vs) if dblCols(c) =>
-      vs.nonEmpty && vs.forall(v => v.isInstanceOf[java.lang.Double] &&
-        !v.asInstanceOf[java.lang.Double].isNaN)
-    case EqualTo(c, _: Long) => longCols(c)
-    case GreaterThan(c, _: Long) => longCols(c)
-    case GreaterThanOrEqual(c, _: Long) => longCols(c)
-    case LessThan(c, _: Long) => longCols(c)
-    case LessThanOrEqual(c, _: Long) => longCols(c)
-    // temporal IN must precede the generic long/int IN cases: those
-    // guard only on the COLUMN set (which contains ts/date columns) and
-    // would match-and-reject a temporal value list before these fire
-    case In(c, vs) if longCols(c) &&
-        vs.nonEmpty && vs.forall(_.isInstanceOf[java.time.LocalDateTime]) => true
-    case In(c, vs) if intCols(c) &&
-        vs.nonEmpty && vs.forall(daysOf(_).isDefined) => true
-    case In(c, vs) if longCols(c) =>
-      vs.nonEmpty && vs.forall(_.isInstanceOf[java.lang.Long])
-    case EqualTo(c, _: Int) => intCols(c)
-    case GreaterThan(c, _: Int) => intCols(c)
-    case GreaterThanOrEqual(c, _: Int) => intCols(c)
-    case LessThan(c, _: Int) => intCols(c)
-    case LessThanOrEqual(c, _: Int) => intCols(c)
-    case In(c, vs) if intCols(c) =>
-      vs.nonEmpty && vs.forall(_.isInstanceOf[java.lang.Integer])
-    case EqualTo(c, _: java.time.LocalDateTime) => longCols(c)
-    case GreaterThan(c, _: java.time.LocalDateTime) => longCols(c)
-    case GreaterThanOrEqual(c, _: java.time.LocalDateTime) => longCols(c)
-    case LessThan(c, _: java.time.LocalDateTime) => longCols(c)
-    case LessThanOrEqual(c, _: java.time.LocalDateTime) => longCols(c)
-    case EqualTo(c, x) if daysOf(x).isDefined => intCols(c)
-    case GreaterThan(c, x) if daysOf(x).isDefined => intCols(c)
-    case GreaterThanOrEqual(c, x) if daysOf(x).isDefined => intCols(c)
-    case LessThan(c, x) if daysOf(x).isDefined => intCols(c)
-    case LessThanOrEqual(c, x) if daysOf(x).isDefined => intCols(c)
-    case EqualTo(c, _: String) => strCols(c)
-    case In(c, vs) if strCols(c) =>
-      vs.nonEmpty && vs.forall(_.isInstanceOf[String])
-    case IsNotNull(c) =>
-      longCols(c) || strCols(c) || intCols(c) || dblCols(c) || fltCols(c)
-    case IsNull(c) =>
-      longCols(c) || strCols(c) || intCols(c) || dblCols(c) || fltCols(c)
-    case _ => false
+  private[sources] def pushable(f: Filter, specs: Seq[ColumnSpec]): Boolean = {
+    def lane(c: String): Int =
+      specs.find(_.name == c).fold(-1)(s => ContainerFormat.laneOf(s.kind))
+    def isLong(c: String) = lane(c) == ContainerFormat.LongLane
+    def isStr(c: String) = lane(c) == ContainerFormat.StrLane
+    def isInt(c: String) = lane(c) == ContainerFormat.IntLane
+    def isDbl(c: String) = lane(c) == ContainerFormat.DblLane
+    f match {
+      case EqualTo(c, x: java.lang.Double) => isDbl(c) && !x.isNaN
+      case GreaterThan(c, x: java.lang.Double) => isDbl(c) && !x.isNaN
+      case GreaterThanOrEqual(c, x: java.lang.Double) => isDbl(c) && !x.isNaN
+      case LessThan(c, x: java.lang.Double) => isDbl(c) && !x.isNaN
+      case LessThanOrEqual(c, x: java.lang.Double) => isDbl(c) && !x.isNaN
+      case In(c, vs) if isDbl(c) =>
+        vs.nonEmpty && vs.forall(v => v.isInstanceOf[java.lang.Double] &&
+          !v.asInstanceOf[java.lang.Double].isNaN)
+      case EqualTo(c, _: Long) => isLong(c)
+      case GreaterThan(c, _: Long) => isLong(c)
+      case GreaterThanOrEqual(c, _: Long) => isLong(c)
+      case LessThan(c, _: Long) => isLong(c)
+      case LessThanOrEqual(c, _: Long) => isLong(c)
+      // temporal IN must precede the generic long/int IN cases: those
+      // guard only on the COLUMN lane (which holds ts/date columns) and
+      // would match-and-reject a temporal value list before these fire
+      case In(c, vs) if isLong(c) &&
+          vs.nonEmpty && vs.forall(_.isInstanceOf[java.time.LocalDateTime]) => true
+      case In(c, vs) if isInt(c) &&
+          vs.nonEmpty && vs.forall(daysOf(_).isDefined) => true
+      case In(c, vs) if isLong(c) =>
+        vs.nonEmpty && vs.forall(_.isInstanceOf[java.lang.Long])
+      case EqualTo(c, _: Int) => isInt(c)
+      case GreaterThan(c, _: Int) => isInt(c)
+      case GreaterThanOrEqual(c, _: Int) => isInt(c)
+      case LessThan(c, _: Int) => isInt(c)
+      case LessThanOrEqual(c, _: Int) => isInt(c)
+      case In(c, vs) if isInt(c) =>
+        vs.nonEmpty && vs.forall(_.isInstanceOf[java.lang.Integer])
+      case EqualTo(c, _: java.time.LocalDateTime) => isLong(c)
+      case GreaterThan(c, _: java.time.LocalDateTime) => isLong(c)
+      case GreaterThanOrEqual(c, _: java.time.LocalDateTime) => isLong(c)
+      case LessThan(c, _: java.time.LocalDateTime) => isLong(c)
+      case LessThanOrEqual(c, _: java.time.LocalDateTime) => isLong(c)
+      case EqualTo(c, x) if daysOf(x).isDefined => isInt(c)
+      case GreaterThan(c, x) if daysOf(x).isDefined => isInt(c)
+      case GreaterThanOrEqual(c, x) if daysOf(x).isDefined => isInt(c)
+      case LessThan(c, x) if daysOf(x).isDefined => isInt(c)
+      case LessThanOrEqual(c, x) if daysOf(x).isDefined => isInt(c)
+      case EqualTo(c, _: String) => isStr(c)
+      case In(c, vs) if isStr(c) =>
+        vs.nonEmpty && vs.forall(_.isInstanceOf[String])
+      case IsNotNull(c) => lane(c) >= 0
+      case IsNull(c) => lane(c) >= 0
+      case _ => false
+    }
   }
 
   /** Compiled row-level predicate over a decoded chunk: the reader
@@ -662,8 +615,7 @@ object GraftDataSource {
   @inline private def nn(c: String, p: RowPred): RowPred =
     (ch, j) => ch.validAt(c, j) && p(ch, j)
 
-  private[sources] def compileFilters(filters: Array[Filter],
-                                      longCols: Set[String]): Array[RowPred] =
+  private[sources] def compileFilters(filters: Array[Filter]): Array[RowPred] =
     filters.map[RowPred] {
       case EqualTo(c, x: Long) => nn(c, (ch, j) => ch.longs.get(c)(j) == x)
       case GreaterThan(c, x: Long) => nn(c, (ch, j) => ch.longs.get(c)(j) > x)
@@ -718,7 +670,7 @@ object GraftDataSource {
       case EqualTo(c, x: String) =>
         val b = x.getBytes(java.nio.charset.StandardCharsets.UTF_8)
         nn(c, (ch, j) => ch.strs.get(c).equalsBytes(j, b))
-      case In(c, vs) if longCols(c) =>
+      case In(c, vs) if vs.nonEmpty && vs.forall(_.isInstanceOf[java.lang.Long]) =>
         val set = vs.map(_.asInstanceOf[java.lang.Long].longValue()).toSet
         nn(c, (ch, j) => set.contains(ch.longs.get(c)(j)))
       case In(c, vs) if vs.nonEmpty && vs.forall(_.isInstanceOf[java.lang.Integer]) =>
@@ -871,8 +823,7 @@ object GraftDataSource {
     */
   private[sources] def planPartitions(path: String,
       manifests: Seq[ParsedManifest], filters: Array[Filter],
-      maxSplitBytes: Long,
-      neededCols: Set[String] = Set.empty,
+      maxSplitBytes: Long, specs: Seq[ColumnSpec], required: StructType,
       hydrate: ParsedManifest => ParsedManifest = m => {
         require(!m.chunksElided,
           "planner bug: an index-elided manifest reached planPartitions " +
@@ -881,6 +832,10 @@ object GraftDataSource {
       },
       tableCols: Seq[String] = Nil): Array[InputPartition] = {
     val defaultNames: Seq[String] = schema.fieldNames.toSeq
+    // the columns every reader decodes: the scan's output plus every
+    // filter reference
+    val neededCols = required.fieldNames.toSet ++ filters.flatMap(_.references)
+    val readSpecs = specs.filter(s => neededCols(s.name))
     val parts = Array.newBuilder[InputPartition]
     manifests.filterNot(_.schemaMarker).sortBy(_.name).foreach { m =>
       val file = m.blockFile(path)
@@ -903,36 +858,34 @@ object GraftDataSource {
       val present: Set[String] =
         if (tableCols.isEmpty) storedNames.toSet
         else tableCols.take(storedNames.size).toSet
-      val absent = neededCols -- present
+      val columns = readSpecs.map(s => s.name -> ReadColumn(s.kind,
+        toStored.getOrElse(s.name, s.name), absent = !present(s.name))).toMap
       val admission =
         containerFilters(m, filters.toSeq, tableCols, defaultNames)
       if (admission.exists(admitManifest(m, _))) {
         val mFilters = admission.get
         val hm = if (m.chunksElided) hydrate(m) else m
-        val digestCur = toStored.collectFirst {
-          case (cur, st) if st == m.digestCol => cur
-        }.getOrElse(m.digestCol)
         if (hm.chunkIndex.isEmpty) {
           // legacy manifest: whole-container sequential stream
-          parts += GraftInputPartition(file, Nil, digestCur, absent, toStored)
+          parts += GraftInputPartition(file, Nil, m.digestCol, columns)
         } else {
           val admitted = hm.chunkIndex
             .filter(admitChunk(_, mFilters))
-            .map(c => ChunkSpec(c.offset, c.length, c.rows, c.blockCrcs))
+            .map(ChunkSpec.of)
           var run = List.empty[ChunkSpec]
           var runBytes = 0L
           admitted.foreach { c =>
             if (run.nonEmpty && runBytes + c.length > maxSplitBytes) {
-              parts += GraftInputPartition(file, run.reverse, digestCur,
-                absent, toStored)
+              parts += GraftInputPartition(file, run.reverse, m.digestCol,
+                columns)
               run = Nil; runBytes = 0L
             }
             run = c :: run
             runBytes += c.length
           }
           if (run.nonEmpty)
-            parts += GraftInputPartition(file, run.reverse, digestCur,
-              absent, toStored)
+            parts += GraftInputPartition(file, run.reverse, m.digestCol,
+              columns)
         }
       }
     }
@@ -1022,11 +975,10 @@ class GraftScanBuilder(path: String, tableSchema: StructType,
     with SupportsPushDownFilters with SupportsPushDownAggregates
     with SupportsPushDownLimit {
 
-  private val longCols = GraftDataSource.longColsOf(tableSchema)
-  private val strCols = GraftDataSource.strColsOf(tableSchema)
-  private val intCols = GraftDataSource.intColsOf(tableSchema)
-  private val dblCols = GraftDataSource.dblColsOf(tableSchema)
-  private val fltCols = GraftDataSource.fltColsOf(tableSchema)
+  /** The table's column plan, resolved once: pushdown, filter
+    * translation and read planning all consult it.
+    */
+  private val specs = GraftDataSource.specsOf(tableSchema)
   private var required: StructType = tableSchema
   private var pushed: Array[Filter] = Array.empty
   private var aggs: Option[Seq[GraftAgg]] = None
@@ -1182,23 +1134,16 @@ class GraftScanBuilder(path: String, tableSchema: StructType,
       }
       else requiredSchema
 
-  private val decScale = GraftDataSource.decScaleOf(tableSchema)
-  private val boolCols = GraftDataSource.boolColsOf(tableSchema)
-  private val f32Cols = GraftDataSource.f32ColsOf(tableSchema)
-
   override def pushFilters(filters: Array[Filter]): Array[Filter] = {
     // decimal/boolean/float predicates are first rewritten to their
     // PHYSICAL constants (unscaled long / 0-1 int / sortable int), then
     // the existing long/int pushdown machinery admits them untouched; a
     // filter whose translated form is unpushable stays residual in its
     // ORIGINAL form
-    val translated =
-      GraftDataSource.translateFilters(filters, decScale, boolCols, f32Cols)
+    val translated = GraftDataSource.translateFilters(filters, specs)
     val paired = filters.zip(translated)
-    pushed = paired.collect { case (_, t) if
-      GraftDataSource.pushable(t, longCols, strCols, intCols, dblCols, fltCols) => t }
-    paired.collect { case (o, t) if
-      !GraftDataSource.pushable(t, longCols, strCols, intCols, dblCols, fltCols) => o }
+    pushed = paired.collect { case (_, t) if GraftDataSource.pushable(t, specs) => t }
+    paired.collect { case (o, t) if !GraftDataSource.pushable(t, specs) => o }
     // fully enforced below: chunk zone-map skip + row-level check
   }
 
@@ -1214,8 +1159,7 @@ class GraftScanBuilder(path: String, tableSchema: StructType,
       case Some(specs) => new GraftAggScan(path, specs, confKv, pinned,
         chainNames)
       case None => new GraftScan(path, required, pushed, confKv, limit,
-        maxSplit, verify, longCols, strCols, intCols, dblCols, fltCols,
-        pinned, chainNames)
+        maxSplit, verify, specs, pinned, chainNames)
     }
   }
 }
@@ -1385,23 +1329,25 @@ class GraftAggScan(path: String, specs: Seq[GraftAgg],
 
 case class GraftAggPartition(values: Array[Any]) extends InputPartition
 
-/** One chunk's read plan: byte range + expected block CRCs. */
-case class ChunkSpec(offset: Long, length: Long, rows: Int,
-                     crcs: Map[String, Long])
+/** How one container holds one column a scan reads: the column's kind,
+  * the label the container stores it under (renames keep historical
+  * labels), and whether the container predates it (round 7, add-only
+  * schema evolution: the reader surfaces it as NULL for every row, and
+  * planning already skipped containers a non-IsNull filter on it would
+  * empty).
+  */
+case class ReadColumn(kind: Int, storedName: String, absent: Boolean)
 
 /** A run of chunks from one container. Empty `chunks` = stream the whole
   * file sequentially (legacy manifests without a chunk index, and the
   * direct-reader fuzz surface). `digestCol` is the manifest's recorded
-  * digest column ("" = chunk digests not verifiable for this partition).
-  * `absentCols` (round 7, add-only schema evolution): needed columns the
-  * container predates — the reader surfaces them as NULL for every row
-  * (planning already skipped containers a non-IsNull filter on such a
-  * column would empty).
+  * (stored) digest column ("" = chunk digests not verifiable for this
+  * partition). `columns` maps each column the scan reads — output and
+  * filter columns, by CURRENT name — to how this container holds it.
   */
 case class GraftInputPartition(file: String, chunks: Seq[ChunkSpec],
-                               digestCol: String = "content",
-                               absentCols: Set[String] = Set.empty,
-                               renames: Map[String, String] = Map.empty)
+                               digestCol: String,
+                               columns: Map[String, ReadColumn])
     extends InputPartition
 
 class GraftScan(path: String, required: StructType,
@@ -1409,11 +1355,7 @@ class GraftScan(path: String, required: StructType,
                 confKv: Map[String, String], limit: Int = Int.MaxValue,
                 maxSplitBytes: Long = GraftDataSource.DefaultMaxSplitBytes,
                 verifyContent: Boolean = true,
-                longCols: Set[String] = GraftDataSource.longCols,
-                strCols: Set[String] = GraftDataSource.strCols,
-                intCols: Set[String] = Set.empty,
-                dblCols: Set[String] = Set.empty,
-                fltCols: Set[String] = Set.empty,
+                specs: Seq[ColumnSpec],
                 asOf: Option[Long] = None,
                 tableCols: Seq[String] = Nil)
     extends Scan with Batch with SupportsReportStatistics
@@ -1442,11 +1384,8 @@ class GraftScan(path: String, required: StructType,
   override def filter(runtime: Array[Filter]): Unit = {
     // runtime (DPP) filters on decimal/boolean keys arrive in LOGICAL
     // form — translate to physical constants like the builder did
-    val accepted = GraftDataSource.translateFilters(runtime,
-      GraftDataSource.decScaleOf(required), GraftDataSource.boolColsOf(required),
-      GraftDataSource.f32ColsOf(required))
-      .filter(GraftDataSource.pushable(_, longCols, strCols, intCols,
-        dblCols, fltCols))
+    val accepted = GraftDataSource.translateFilters(runtime, specs)
+      .filter(GraftDataSource.pushable(_, specs))
     filters = filters ++ accepted
   }
 
@@ -1538,12 +1477,10 @@ class GraftScan(path: String, required: StructType,
     */
   override def planInputPartitions(): Array[InputPartition] =
     GraftDataSource.planPartitions(path, committed(), filters, maxSplitBytes,
-      required.fieldNames.toSet ++ filters.flatMap(_.references), hydrate,
-      tableCols)
+      specs, required, hydrate, tableCols)
 
   override def createReaderFactory(): PartitionReaderFactory =
-    new GraftReaderFactory(required, filters, confKv, limit, verifyContent,
-      longCols, strCols, intCols, dblCols, fltCols)
+    new GraftReaderFactory(required, filters, confKv, limit, verifyContent)
 
   /** `readStream.format("graft")` — micro-batch TAILING of this table:
     * each trigger reads exactly the manifests committed since the last
@@ -1557,25 +1494,31 @@ class GraftScan(path: String, required: StructType,
       "graft time travel (versionAsOf/timestampAsOf) is batch-only; a " +
         "stream tails the live table")
     new GraftMicroBatchStream(path, checkpointLocation, required, filters,
-      confKv, maxSplitBytes, verifyContent, longCols, strCols, intCols,
-      dblCols, fltCols, tableCols)
+      confKv, maxSplitBytes, verifyContent, specs, tableCols)
   }
 }
 
 class GraftReaderFactory(required: StructType, filters: Array[Filter],
                          confKv: Map[String, String], limit: Int,
-                         verifyContent: Boolean,
-                         longCols: Set[String] = GraftDataSource.longCols,
-                         strCols: Set[String] = GraftDataSource.strCols,
-                         intCols: Set[String] = Set.empty,
-                         dblCols: Set[String] = Set.empty,
-                         fltCols: Set[String] = Set.empty)
+                         verifyContent: Boolean)
     extends PartitionReaderFactory {
+
+  /** Row access over the columnar reader's batches (Spark itself always
+    * reads columnar: [[supportColumnarReads]]).
+    */
   override def createReader(partition: InputPartition): PartitionReader[InternalRow] = {
-    val p = partition.asInstanceOf[GraftInputPartition]
-    new GraftPartitionReader(p.file, p.chunks, required, filters, confKv,
-      limit, verifyContent, longCols, strCols, p.digestCol, intCols, dblCols,
-      fltCols, p.absentCols, p.renames)
+    val batches = createColumnarReader(partition)
+    new PartitionReader[InternalRow] {
+      private var rows: java.util.Iterator[InternalRow] =
+        java.util.Collections.emptyIterator()
+      private var cur: InternalRow = _
+      override def next(): Boolean = {
+        while (!rows.hasNext && batches.next()) rows = batches.get().rowIterator()
+        rows.hasNext && { cur = rows.next(); true }
+      }
+      override def get(): InternalRow = cur
+      override def close(): Unit = batches.close()
+    }
   }
 
   /** The decoded data is already columnar (`Array[Long]`/`Array[String]`
@@ -1583,79 +1526,45 @@ class GraftReaderFactory(required: StructType, filters: Array[Filter],
     * `GenericInternalRow` per row; `ColumnarToRow` (codegen'd) or
     * downstream columnar operators take it from there.
     */
-  override def supportColumnarReads(partition: InputPartition): Boolean =
-    // ARRAY<FLOAT> needs a child vector per batch — the row reader's
-    // primitive-array path is simpler and the embedding consumers
-    // (ANN/dedup) immediately explode into scalar math anyway
-    !required.fields.exists(_.dataType.isInstanceOf[ArrayType])
+  override def supportColumnarReads(partition: InputPartition): Boolean = true
 
   override def createColumnarReader(
-      partition: InputPartition): PartitionReader[org.apache.spark.sql.vectorized.ColumnarBatch] = {
-    val p = partition.asInstanceOf[GraftInputPartition]
-    new GraftColumnarReader(p.file, p.chunks, required, filters, confKv,
-      limit, verifyContent, longCols, strCols, p.digestCol, intCols, dblCols,
-      fltCols, p.absentCols, p.renames)
-  }
+      partition: InputPartition): PartitionReader[org.apache.spark.sql.vectorized.ColumnarBatch] =
+    new GraftColumnarReader(partition.asInstanceOf[GraftInputPartition],
+      required, filters, confKv, limit, verifyContent)
 }
 
-/** Shared streaming chunk iteration for the row and columnar readers:
-  * per chunk, needed column blocks are read (bounded by one block at a
-  * time) and decoded, non-needed blocks are position advances; reads
-  * that decode `content` verify the chunk digest.
+/** Vectorized reader over one partition's chunk ranges: one
+  * `ColumnarBatch` per (filtered) chunk, filled straight from the decoded
+  * column arrays. Needed column blocks are read (bounded by one block at
+  * a time) and decoded, non-needed blocks are position advances; reads
+  * that decode the digest column verify the chunk digest. Columns, pushed
+  * filters and the digest column are resolved to the container's STORED
+  * labels up front (rename support).
   */
-private[sources] final class ChunkCursor(
-    file: String, chunks: Seq[ChunkSpec], required: StructType,
-    filters: Array[Filter], confKv: Map[String, String],
-    verifyContent: Boolean,
-    longCols: Set[String] = GraftDataSource.longCols,
-    strCols: Set[String] = GraftDataSource.strCols,
-    digestCol: String = "content",
-    intCols: Set[String] = Set.empty,
-    dblCols: Set[String] = Set.empty,
-    fltCols: Set[String] = Set.empty,
-    renames: Map[String, String] = Map.empty) {
+class GraftColumnarReader(p: GraftInputPartition, required: StructType,
+                          filters: Array[Filter], confKv: Map[String, String],
+                          limit: Int, verifyContent: Boolean)
+    extends PartitionReader[org.apache.spark.sql.vectorized.ColumnarBatch] {
+  import org.apache.spark.sql.execution.vectorized.OnHeapColumnVector
+  import org.apache.spark.sql.vectorized.{ColumnVector, ColumnarBatch}
 
-  private val filterCols: Set[String] = filters.toSeq.flatMap(_.references).toSet
-  // rename support: the query works in CURRENT names, this container's
-  // blocks are keyed by its stored names — request stored, then re-key
-  // each decoded chunk back to current before anything row-level runs
-  @inline private def st(c: String): String = renames.getOrElse(c, c)
-  val neededLongs: Set[String] =
-    (required.fieldNames.toSet ++ filterCols).intersect(longCols).map(st)
-  val neededStrs: Set[String] =
-    (required.fieldNames.toSet ++ filterCols).intersect(strCols).map(st)
-  val neededInts: Set[String] =
-    (required.fieldNames.toSet ++ filterCols).intersect(intCols).map(st)
-  val neededDbls: Set[String] =
-    (required.fieldNames.toSet ++ filterCols).intersect(dblCols).map(st)
-  val neededFlts: Set[String] =
-    (required.fieldNames.toSet ++ filterCols).intersect(fltCols).map(st)
-  private val verify =
-    verifyContent && digestCol.nonEmpty && neededStrs.contains(st(digestCol))
-
-  /** Re-key a decoded chunk's column maps stored -> current. Two-phase
-    * (remove all, then insert) so a SWAP rename (a<->b across two
-    * renames) can't clobber one side mid-move.
-    */
-  private def rekey(c: DecodedChunk): DecodedChunk = {
-    def fix[T](m: java.util.HashMap[String, T]): Unit = {
-      val moved = new java.util.HashMap[String, T]()
-      renames.foreach { case (cur, stored) =>
-        if (cur != stored) {
-          val v = m.remove(stored)
-          if (v != null) moved.put(cur, v)
-        }
-      }
-      m.putAll(moved)
-    }
-    fix(c.longs); fix(c.strs); fix(c.ints); fix(c.doubles); fix(c.nulls)
-    fix(c.flts)
-    c
-  }
-
-  private val conf = ContainerIO.confFrom(confKv)
-  private val hPath = new org.apache.hadoop.fs.Path(file)
-  private val fs = ContainerIO.fs(file, conf)
+  // schema evolution: IsNull on a column this container predates is
+  // trivially true — dropped BEFORE the stored-label translation (a
+  // reused current name can collide with another position's stored
+  // label); planning skipped containers any other filter on one would
+  // empty, and such columns have no block to request
+  private val preds = GraftDataSource.compileFilters(
+    GraftDataSource.effectiveFilters(filters,
+      p.columns.collect { case (c, rc) if rc.absent => c }.toSet)
+      .map(GraftDataSource.renameRefs(_,
+        p.columns.map { case (c, rc) => c -> rc.storedName })))
+  private val fields = required.fields
+  private val cols: Array[ReadColumn] = fields.map(f => p.columns(f.name))
+  private val decoded: Seq[(String, Int)] =
+    p.columns.values.filterNot(_.absent).map(rc => (rc.storedName, rc.kind)).toSeq
+  private val digestCol =
+    if (verifyContent && decoded.exists(_._1 == p.digestCol)) p.digestCol else ""
 
   /** A scan planned from a prior index snapshot can race an overwrite,
     * epoch replay, or compaction that deletes the old generation's block
@@ -1667,84 +1576,26 @@ private[sources] final class ChunkCursor(
     */
   private def snapshotSuperseded(): Nothing =
     throw new IllegalStateException(
-      s"graft snapshot superseded: $file was removed by a concurrent " +
+      s"graft snapshot superseded: ${p.file} was removed by a concurrent " +
         "overwrite/compaction after this scan was planned — re-run the query")
 
+  private val hPath = new org.apache.hadoop.fs.Path(p.file)
+  private val fs = ContainerIO.fs(p.file, ContainerIO.confFrom(confKv))
   private val fileLen =
     try fs.getFileStatus(hPath).getLen
     catch { case _: java.io.FileNotFoundException => snapshotSuperseded() }
   private val in =
     try fs.open(hPath)
     catch { case _: java.io.FileNotFoundException => snapshotSuperseded() }
-
-  val chunkIter: Iterator[DecodedChunk] = {
-    val raw0 =
-      if (chunks.nonEmpty) chunks.iterator.map { cs =>
-        require(cs.offset >= 0 && cs.length >= 0 && cs.offset + cs.length <= fileLen,
-          s"chunk range [${cs.offset}, +${cs.length}) overruns $file ($fileLen bytes)")
-        val ci = new ContainerInput(in, cs.offset, cs.offset + cs.length)
-        val chunk = ContainerFormat.readChunk(ci, neededLongs, neededStrs,
-          cs.crcs, neededInts, neededDbls, neededFlts)
-        require(ci.atEnd, s"chunk at ${cs.offset} shorter than its indexed length")
-        require(chunk.rows == cs.rows, s"chunk at ${cs.offset} row count mismatch")
-        chunk
-      } else {
-        val ci = new ContainerInput(in, 0L, fileLen)
-        ContainerFormat.readPrelude(ci)
-        new Iterator[DecodedChunk] {
-          override def hasNext: Boolean = !ci.atEnd
-          override def next(): DecodedChunk =
-            ContainerFormat.readChunk(ci, neededLongs, neededStrs,
-              Map.empty, neededInts, neededDbls, neededFlts)
-        }
-      }
-    val raw = if (renames.isEmpty) raw0 else raw0.map(rekey)
-    if (!verify) raw
-    else raw.map { c => ContainerFormat.verifyContentDigest(c, digestCol); c }
-  }
-
-  def close(): Unit = in.close()
-}
-
-/** Vectorized reader: one `ColumnarBatch` per (filtered) chunk, filled
-  * straight from the decoded column arrays.
-  */
-class GraftColumnarReader(file: String, chunks: Seq[ChunkSpec],
-                          required: StructType, filters: Array[Filter],
-                          confKv: Map[String, String],
-                          limit: Int, verifyContent: Boolean,
-                          longCols: Set[String] = GraftDataSource.longCols,
-                          strCols: Set[String] = GraftDataSource.strCols,
-                          digestCol: String = "content",
-                          intCols: Set[String] = Set.empty,
-                          dblCols: Set[String] = Set.empty,
-                          fltCols: Set[String] = Set.empty,
-                          absentCols: Set[String] = Set.empty,
-                          renames: Map[String, String] = Map.empty)
-    extends PartitionReader[org.apache.spark.sql.vectorized.ColumnarBatch] {
-  import org.apache.spark.sql.execution.vectorized.OnHeapColumnVector
-  import org.apache.spark.sql.vectorized.{ColumnVector, ColumnarBatch}
-
-  // schema evolution: this container predates `absentCols` — their rows
-  // are all-NULL here. IsNull on them is trivially true (dropped from
-  // the compiled predicates); planning skipped containers any other
-  // filter on them would empty; the cursor must not request their blocks.
-  private val effFilters = GraftDataSource.effectiveFilters(filters, absentCols)
-  private val cursor = new ChunkCursor(file, chunks, required, effFilters,
-    confKv, verifyContent, longCols -- absentCols, strCols -- absentCols,
-    digestCol, intCols -- absentCols, dblCols -- absentCols,
-    fltCols -- absentCols, renames)
-  private val preds = GraftDataSource.compileFilters(effFilters, longCols)
-  private val fields = required.fields
-  private val fieldAbsent: Array[Boolean] =
-    required.fields.map(f => absentCols.contains(f.name))
+  private val chunks = ContainerFormat.readChunks(in, fileLen, p.file,
+    p.chunks, decoded, digestCol)
   private var batch: ColumnarBatch = _
   private var emitted = 0
 
   override def next(): Boolean = {
     if (batch != null) { batch.close(); batch = null }
-    while (emitted < limit && cursor.chunkIter.hasNext) {
-      val chunk = cursor.chunkIter.next()
+    while (emitted < limit && chunks.hasNext) {
+      val chunk = chunks.next()
       // selection vector: row indices surviving the pushed filters
       val sel = new Array[Int](chunk.rows)
       var m = 0
@@ -1759,7 +1610,7 @@ class GraftColumnarReader(file: String, chunks: Seq[ChunkSpec],
         val vecs = new Array[ColumnVector](fields.length)
         var i = 0
         while (i < fields.length) {
-          val name = fields(i).name
+          val name = cols(i).storedName
           val v = new OnHeapColumnVector(m, fields(i).dataType)
           // per-chunk validity bitmap (nullable columns only); selected
           // NULL rows become vector nulls, their placeholder values are
@@ -1767,7 +1618,7 @@ class GraftColumnarReader(file: String, chunks: Seq[ChunkSpec],
           val nullBm = chunk.nulls.get(name)
           @inline def isNullRow(r: Int): Boolean =
             nullBm != null && (nullBm(r >> 3) & (1 << (r & 7))) != 0
-          if (fieldAbsent(i)) v.putNulls(0, m)
+          if (cols(i).absent) v.putNulls(0, m)
           else fields(i).dataType match {
             case LongType | TimestampNTZType =>
               val src = chunk.longs.get(name)
@@ -1824,6 +1675,21 @@ class GraftColumnarReader(file: String, chunks: Seq[ChunkSpec],
                 else v.putFloat(k, graft.codecs.FloatBits.fromSortableInt(src(r)))
                 k += 1
               }
+            case _: ArrayType =>
+              // each row is a slice of the child vector, bulk-copied
+              // from the decoded float pool
+              val u = chunk.flts.get(name)
+              val elems = v.arrayData()
+              var k = 0
+              while (k < m) {
+                val r = sel(k)
+                if (isNullRow(r)) v.putNull(k)
+                else {
+                  v.putArray(k, elems.getElementsAppended, u.lens(r))
+                  elems.appendFloats(u.lens(r), u.pool, u.offsets(r))
+                }
+                k += 1
+              }
             case _ =>
               // straight from the decoded UTF-8 slices: no String
               // materialization, no re-encode
@@ -1850,99 +1716,8 @@ class GraftColumnarReader(file: String, chunks: Seq[ChunkSpec],
   override def get(): org.apache.spark.sql.vectorized.ColumnarBatch = batch
   override def close(): Unit = {
     if (batch != null) { batch.close(); batch = null }
-    cursor.close()
+    in.close()
   }
-}
-
-/** Streaming reader over one partition's chunk ranges: per chunk, needed
-  * column blocks are read (bounded by one block at a time) and decoded,
-  * non-needed blocks are position advances. Pushed filters are re-checked
-  * per row; reads that decode `content` verify the chunk digest.
-  */
-class GraftPartitionReader(file: String, chunks: Seq[ChunkSpec],
-                           required: StructType, filters: Array[Filter],
-                           confKv: Map[String, String],
-                           limit: Int, verifyContent: Boolean,
-                           longCols: Set[String] = GraftDataSource.longCols,
-                           strCols: Set[String] = GraftDataSource.strCols,
-                           digestCol: String = "content",
-                           intCols: Set[String] = Set.empty,
-                           dblCols: Set[String] = Set.empty,
-                           fltCols: Set[String] = Set.empty,
-                           absentCols: Set[String] = Set.empty,
-                           renames: Map[String, String] = Map.empty)
-    extends PartitionReader[InternalRow] {
-
-  /** Sequential whole-file stream (legacy tables; fuzz surface). */
-  def this(file: String, required: StructType, filters: Array[Filter],
-           confKv: Map[String, String]) =
-    this(file, Nil, required, filters, confKv, Int.MaxValue, false)
-
-  // schema evolution: see GraftColumnarReader — absent columns are
-  // all-NULL in this container and their blocks are never requested
-  private val effFilters = GraftDataSource.effectiveFilters(filters, absentCols)
-  private val cursor = new ChunkCursor(file, chunks, required, effFilters,
-    confKv, verifyContent, longCols -- absentCols, strCols -- absentCols,
-    digestCol, intCols -- absentCols, dblCols -- absentCols,
-    fltCols -- absentCols, renames)
-  private val preds = GraftDataSource.compileFilters(effFilters, longCols)
-
-  private val fields = required.fields
-  private val fieldAbsent: Array[Boolean] =
-    required.fields.map(f => absentCols.contains(f.name))
-  private val it: Iterator[InternalRow] = cursor.chunkIter.flatMap { chunk =>
-    (0 until chunk.rows).iterator.flatMap { j =>
-      if (!GraftDataSource.rowPasses(preds, chunk, j)) None
-      else {
-        val row = new GenericInternalRow(fields.length)
-        var i = 0
-        while (i < fields.length) {
-          val name = fields(i).name
-          if (fieldAbsent(i) || !chunk.validAt(name, j)) row.setNullAt(i)
-          else fields(i).dataType match {
-            case LongType | TimestampNTZType =>
-              row.setLong(i, chunk.longs.get(name)(j))
-            case IntegerType | DateType =>
-              row.setInt(i, chunk.ints.get(name)(j))
-            case DoubleType =>
-              row.setDouble(i, chunk.doubles.get(name)(j))
-            case d: DecimalType =>
-              row.update(i, org.apache.spark.sql.types.Decimal.createUnsafe(
-                chunk.longs.get(name)(j), d.precision, d.scale))
-            case BooleanType =>
-              row.setBoolean(i, chunk.ints.get(name)(j) != 0)
-            case FloatType =>
-              row.setFloat(i, graft.codecs.FloatBits.fromSortableInt(
-                chunk.ints.get(name)(j)))
-            case BinaryType =>
-              // InternalRow owns its binary — copy the slice out
-              val u = chunk.strs.get(name)
-              row.update(i, java.util.Arrays.copyOfRange(
-                u.pool, u.offsets(j), u.offsets(j) + u.lens(j)))
-            case _: ArrayType =>
-              row.update(i,
-                org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
-                  .fromPrimitiveArray(chunk.flts.get(name).slice(j)))
-            case _ =>
-              // zero-copy view over the decoded UTF-8 slice
-              val u = chunk.strs.get(name)
-              row.update(i, UTF8String.fromBytes(u.pool, u.offsets(j), u.lens(j)))
-          }
-          i += 1
-        }
-        Some(row: InternalRow)
-      }
-    }
-  }
-
-  private var cur: InternalRow = _
-  private var emitted = 0
-
-  override def next(): Boolean =
-    if (emitted < limit && it.hasNext) { cur = it.next(); emitted += 1; true }
-    else false
-  override def get(): InternalRow = cur
-  override def close(): Unit = cursor.close()
 }
 
 // -------------------------------------------------------------- streaming read
@@ -2000,10 +1775,7 @@ class GraftMicroBatchStream(path: String, checkpointLocation: String,
                             filters: Array[Filter],
                             confKv: Map[String, String],
                             maxSplitBytes: Long, verifyContent: Boolean,
-                            longCols: Set[String], strCols: Set[String],
-                            intCols: Set[String],
-                            dblCols: Set[String] = Set.empty,
-                            fltCols: Set[String] = Set.empty,
+                            specs: Seq[ColumnSpec],
                             tableCols: Seq[String] = Nil)
     extends org.apache.spark.sql.connector.read.streaming.MicroBatchStream {
   import org.apache.spark.sql.connector.read.streaming.Offset
@@ -2188,13 +1960,13 @@ class GraftMicroBatchStream(path: String, checkpointLocation: String,
           "; their replacement generations arrive as later batches")
     }
     GraftDataSource.planPartitions(path, fresh ++ substituted, filters,
-      maxSplitBytes, required.fieldNames.toSet ++ filters.flatMap(_.references),
-      Manifests.loadChunkIndex(conf, path, _), tableCols)
+      maxSplitBytes, specs, required, Manifests.loadChunkIndex(conf, path, _),
+      tableCols)
   }
 
   override def createReaderFactory(): PartitionReaderFactory =
     new GraftReaderFactory(required, filters, confKv, Int.MaxValue,
-      verifyContent, longCols, strCols, intCols, dblCols, fltCols)
+      verifyContent)
 
   /** Fold per-batch seen-log entries at or below the COMMITTED offset
     * into one `<end>.compact.json` once [[GraftMicroBatchStream

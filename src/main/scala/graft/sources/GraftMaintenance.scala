@@ -2,7 +2,7 @@ package graft.sources
 
 import org.apache.spark.sql.SparkSession
 
-import graft.engine.{ColumnarEngine, ColumnSpec, ContainerFormat, ContainerIO, ContainerInput, DecodedChunk, Manifests, ParsedManifest, PartManifest}
+import graft.engine.{ChunkSpec, ColumnarEngine, ColumnSpec, ContainerFormat, ContainerIO, Manifests, ParsedManifest, PartManifest}
 
 /** Table maintenance for graft tables — the operational side a
   * long-running streaming sink needs: every micro-batch epoch commits
@@ -47,7 +47,7 @@ object GraftMaintenance {
     * rows. Old-generation files are deleted only after the new snapshot
     * is live; a reader that planned against the prior snapshot gets the
     * controlled snapshot-superseded error, never a raw
-    * FileNotFoundException (see [[ChunkCursor]]).
+    * FileNotFoundException (see [[GraftColumnarReader]]).
     *
     * Exactly-once interplay: the compacted manifest records the consumed
     * EPOCH keys as its `ancestors` (compaction consumes only whole
@@ -378,8 +378,7 @@ object GraftMaintenance {
     }
     val pushed = conjuncts(cond).flatMap(sourceFilterOf)
     val admission = GraftDataSource.translateFilters(pushed.toArray,
-      GraftDataSource.decScaleOf(st), GraftDataSource.boolColsOf(st),
-      GraftDataSource.f32ColsOf(st)).toSeq
+      chain.filterNot(_.dropped)).toSeq
     val defaultNames = GraftDataSource.schema.fieldNames.toSeq
     val affected = committed.filter { m =>
       GraftDataSource.containerFilters(m, admission, tableCols, defaultNames)
@@ -532,9 +531,8 @@ object GraftMaintenance {
       case o => Seq(o)
     }
     val pushed = conjuncts(cond).flatMap(sourceFilterOf)
-    val admission = GraftDataSource.translateFilters(pushed.toArray,
-      GraftDataSource.decScaleOf(st), GraftDataSource.boolColsOf(st),
-      GraftDataSource.f32ColsOf(st)).toSeq
+    val admission =
+      GraftDataSource.translateFilters(pushed.toArray, visible).toSeq
     val defaultNames = GraftDataSource.schema.fieldNames.toSeq
     val affected = committed.filter { m =>
       GraftDataSource.containerFilters(m, admission, tableCols, defaultNames)
@@ -758,9 +756,7 @@ object GraftMaintenance {
                 sf.LessThanOrEqual(keys(i), hi))
             }
           }
-        GraftDataSource.translateFilters(raw.toArray,
-          GraftDataSource.decScaleOf(st), GraftDataSource.boolColsOf(st),
-          GraftDataSource.f32ColsOf(st)).toSeq
+        GraftDataSource.translateFilters(raw.toArray, visible).toSeq
       }
     val defaultNames = GraftDataSource.schema.fieldNames.toSeq
     val affected =
@@ -930,16 +926,7 @@ object GraftMaintenance {
     val binNulls = new Array[Boolean](enc.binNames.length)
     val fltNulls = new Array[Boolean](enc.fltNames.length)
     // read EVERY live column of the container (full rewrite)
-    val live = containerSpecs.filterNot(_.dropped)
-    val neededL = live.collect {
-      case s if s.kind == 0 || s.kind == 3 || s.kind == 8 => s.name }.toSet
-    val neededS6 = live.collect {
-      case s if s.kind == 1 || s.kind == 6 => s.name }.toSet
-    val neededI = live.collect {
-      case s if s.kind == 2 || s.kind == 4 || s.kind == 9 ||
-        s.kind == 10 => s.name }.toSet
-    val neededD = live.collect { case s if s.kind == 5 => s.name }.toSet
-    val neededF = live.collect { case s if s.kind == 7 => s.name }.toSet
+    val live = containerSpecs.filterNot(_.dropped).map(s => (s.name, s.kind))
     val ancestors = Manifests.capAncestors(
       Seq(Manifests.epochKey(Manifests.logicalName(m.name))) ++ m.ancestors)
     // partition-transform metadata survives only when no updated column
@@ -958,24 +945,8 @@ object GraftMaintenance {
     val fileLen = fs.getFileStatus(p).getLen
     val in = fs.open(p)
     try {
-      val chunks: Iterator[DecodedChunk] =
-        if (m.chunkIndex.nonEmpty) m.chunkIndex.iterator.map { cs =>
-          val ci = new ContainerInput(in, cs.offset, cs.offset + cs.length)
-          ContainerFormat.readChunk(ci, neededL, neededS6, cs.blockCrcs,
-            neededI, neededD, neededF)
-        } else {
-          val ci = new ContainerInput(in, 0L, fileLen)
-          ContainerFormat.readPrelude(ci)
-          new Iterator[DecodedChunk] {
-            override def hasNext: Boolean = !ci.atEnd
-            override def next(): DecodedChunk =
-              ContainerFormat.readChunk(ci, neededL, neededS6, Map.empty,
-                neededI, neededD, neededF)
-          }
-        }
-      chunks.foreach { chunk =>
-        if (m.digestCol.nonEmpty)
-          ContainerFormat.verifyContentDigest(chunk, m.digestCol)
+      ContainerFormat.readChunks(in, fileLen, file,
+          m.chunkIndex.map(ChunkSpec.of), live, m.digestCol).foreach { chunk =>
         var j = 0
         while (j < chunk.rows) {
           val row = matcher.buildRow(chunk, j)
@@ -1378,16 +1349,7 @@ object GraftMaintenance {
     // dropped positions (round 9) hold no data: request no block, read
     // no lane (the encoder's own lanes are live-filtered the same way)
     val liveSchema = schema.filterNot(_.dropped)
-    val neededL = liveSchema.collect {
-      case s if s.kind == 0 || s.kind == 3 || s.kind == 8 => s.name }.toSet
-    val neededS = liveSchema.collect { case s if s.kind == 1 => s.name }.toSet
-    val neededI = liveSchema.collect {
-      case s if s.kind == 2 || s.kind == 4 || s.kind == 9 ||
-        s.kind == 10 => s.name }.toSet
-    val neededD = liveSchema.collect { case s if s.kind == 5 => s.name }.toSet
-    // kind 6 (binary) decodes into the byte-slice (str) map
-    val neededS6 = neededS ++ liveSchema.collect { case s if s.kind == 6 => s.name }
-    val neededF = liveSchema.collect { case s if s.kind == 7 => s.name }.toSet
+    val live = liveSchema.map(s => (s.name, s.kind))
     val numKind: Array[Int] =
       liveSchema.filter(s => s.kind != 1 && s.kind != 6 && s.kind != 7)
         .map(_.kind).toArray
@@ -1411,24 +1373,9 @@ object GraftMaintenance {
       val fileLen = fs.getFileStatus(p).getLen
       val in = fs.open(p)
       try {
-        val chunks: Iterator[DecodedChunk] =
-          if (m.chunkIndex.nonEmpty) m.chunkIndex.iterator.map { cs =>
-            val ci = new ContainerInput(in, cs.offset, cs.offset + cs.length)
-            ContainerFormat.readChunk(ci, neededL, neededS6, cs.blockCrcs,
-              neededI, neededD, neededF)
-          } else {
-            val ci = new ContainerInput(in, 0L, fileLen)
-            ContainerFormat.readPrelude(ci)
-            new Iterator[DecodedChunk] {
-              override def hasNext: Boolean = !ci.atEnd
-              override def next(): DecodedChunk =
-                ContainerFormat.readChunk(ci, neededL, neededS6, Map.empty,
-                  neededI, neededD, neededF)
-            }
-          }
-        chunks.foreach { chunk =>
-          if (digestCol.nonEmpty) ContainerFormat.verifyContentDigest(chunk, digestCol)
-          val strCols = strNames.map(n => chunk.strs.get(n).strings)
+        ContainerFormat.readChunks(in, fileLen, file,
+            m.chunkIndex.map(ChunkSpec.of), live, digestCol).foreach { chunk =>
+          val strValues = strNames.map(n => chunk.strs.get(n).strings)
           var j = 0
           while (j < chunk.rows) {
             if (drop != null && drop.matches(chunk, j)) { dropped += 1; j += 1 }
@@ -1437,7 +1384,7 @@ object GraftMaintenance {
             var i = 0
             while (i < strNames.length) {
               if (anyNullable) strNulls(i) = !chunk.validAt(strNames(i), j)
-              strs(i) = strCols(i)(j)
+              strs(i) = strValues(i)(j)
               i += 1
             }
             val longs = new Array[Long](longNames.length)

@@ -251,7 +251,7 @@ class DeleteSpec extends AnyFunSuite {
       StructField("tag", StringType, nullable = false)))
     val confKv = ContainerIO.confSnapshot(spark)
     def mkStream() = new GraftMicroBatchStream(d, ckpt, schema, Array.empty,
-      confKv, 128L << 20, true, Set("id"), Set("tag"), Set.empty)
+      confKv, 128L << 20, true, GraftDataSource.specsOf(schema))
     val s1 = mkStream()
     val off0 = s1.initialOffset()
     Seq((1L, "a"), (2L, "b"), (3L, "c")).toDF("id", "tag").coalesce(1)

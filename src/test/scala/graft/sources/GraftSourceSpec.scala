@@ -18,6 +18,17 @@ class GraftSourceSpec extends AnyFunSuite {
     scans.head.asInstanceOf[GraftScan]
   }
 
+  /** The scan's columnar reader over a whole container file, read as a
+    * sequential stream: no chunk index, no manifest CRCs, no digest.
+    */
+  private def directReader(file: String,
+      schema: org.apache.spark.sql.types.StructType): GraftColumnarReader =
+    new GraftColumnarReader(GraftInputPartition(file, Nil, "",
+      GraftDataSource.specsOf(schema)
+        .map(s => s.name -> ReadColumn(s.kind, s.name, absent = false)).toMap),
+      schema, Array.empty, graft.engine.ContainerIO.confSnapshot(spark),
+      Int.MaxValue, verifyContent = false)
+
   private lazy val dir = {
     val d = java.nio.file.Files.createTempDirectory("graft-dsv2").toString
     val derived = ColumnarEngine.derive(SourceTable.synthesize(spark, 600, 3))
@@ -647,16 +658,12 @@ class GraftSourceSpec extends AnyFunSuite {
     w.putBytes(new Array[Byte](32)) // digest (no string columns)
     val file = s"$d/crafted.gblk"
     java.nio.file.Files.write(java.nio.file.Paths.get(file), w.result())
-    val confKv = graft.engine.ContainerIO.confSnapshot(spark)
-    val cursor = new ChunkCursor(file, Nil,
+    val r = directReader(file,
       org.apache.spark.sql.types.StructType(Seq(
         org.apache.spark.sql.types.StructField("x",
-          org.apache.spark.sql.types.IntegerType, nullable = false))),
-      Array.empty, confKv, verifyContent = false,
-      longCols = Set.empty, strCols = Set.empty, digestCol = "",
-      intCols = Set("x"))
-    try intercept[graft.core.DecodeError] { cursor.chunkIter.next() }
-    finally cursor.close()
+          org.apache.spark.sql.types.IntegerType, nullable = false))))
+    try intercept[graft.core.DecodeError] { r.next() }
+    finally r.close()
   }
 
   test("aggregate pushdown over an empty table: count 0, null min/max") {
@@ -694,16 +701,16 @@ class GraftSourceSpec extends AnyFunSuite {
       m(rnd.nextInt(m.length)) = rnd.nextInt(256).toByte
       java.nio.file.Files.write(tmp, m)
       controlled(s"reader mut $k") {
-        val r = new GraftPartitionReader(tmp.toString, schema,
-          Array.empty, Map.empty)
-        while (r.next()) r.get()
+        val r = directReader(tmp.toString, schema)
+        try while (r.next()) r.get()
+        finally r.close()
       }
       val cut = 1 + rnd.nextInt(bytes.length)
       java.nio.file.Files.write(tmp, java.util.Arrays.copyOf(bytes, cut))
       controlled(s"reader trunc $k") {
-        val r = new GraftPartitionReader(tmp.toString, schema,
-          Array.empty, Map.empty)
-        while (r.next()) r.get()
+        val r = directReader(tmp.toString, schema)
+        try while (r.next()) r.get()
+        finally r.close()
       }
       k += 1
     }
@@ -732,12 +739,9 @@ class GraftSourceSpec extends AnyFunSuite {
       try {
         // direct sequential reader (no manifest CRCs shielding the flip):
         // every outcome must be correct data or a typed decode failure
-        val cursor = new ChunkCursor(tmp.toString, Nil, schema, Array.empty,
-          graft.engine.ContainerIO.confSnapshot(spark),
-          verifyContent = false, longCols = Set.empty, strCols = Set.empty,
-          digestCol = "", intCols = Set("n"))
-        try while (cursor.chunkIter.hasNext) cursor.chunkIter.next()
-        finally cursor.close()
+        val r = directReader(tmp.toString, schema)
+        try while (r.next()) r.get()
+        finally r.close()
       } catch {
         case _: graft.core.DecodeError => ()
         case _: IllegalArgumentException => ()
@@ -913,17 +917,36 @@ class GraftSourceSpec extends AnyFunSuite {
   }
 
   test("reads are vectorized: the scan emits ColumnarBatches (ColumnarToRow in plan)") {
-    val df = spark.read.format("graft").load(dir).select("lang", "len_content")
-    df.collect()
-    val hasC2R = df.queryExecution.executedPlan.collect {
-      case c: org.apache.spark.sql.execution.ColumnarToRowExec => c
-    }.nonEmpty
-    assert(hasC2R, "expected a columnar scan (ColumnarToRow above BatchScan):\n" +
-      df.queryExecution.executedPlan.toString.take(600))
+    import spark.implicits._
+    // ARRAY<FLOAT> (kind 7) with NULL rows, over several chunks
+    val embDir = java.nio.file.Files.createTempDirectory("graft-dsv2-vec").toString
+    def emb(i: Int): Array[Float] =
+      if (i % 5 == 0) null else Array.tabulate(i % 3 + 1)(x => i + x * 0.5f)
+    (0 until 40).map(i => (i.toLong, emb(i))).toDF("id", "emb")
+      .coalesce(1).write.format("graft").option("chunkRows", "16")
+      .mode("overwrite").save(embDir)
+    val embRead = spark.read.format("graft").load(embDir)
+      .filter(col("id") >= 3L).select("id", "emb").limit(20)
+    val inputs = Seq(
+      spark.read.format("graft").load(dir).select("lang", "len_content"),
+      embRead)
+    inputs.foreach { df =>
+      df.collect()
+      val hasC2R = df.queryExecution.executedPlan.collect {
+        case c: org.apache.spark.sql.execution.ColumnarToRowExec => c
+      }.nonEmpty
+      assert(hasC2R, "expected a columnar scan (ColumnarToRow above BatchScan):\n" +
+        df.queryExecution.executedPlan.toString.take(600))
+    }
     // filters + limit compose with the columnar path and stay exact
     val lim = spark.read.format("graft").load(dir)
       .filter(col("len_content") >= 0L).limit(9)
     assert(lim.count() === 9)
+    val got = embRead.as[(Long, Option[Seq[Float]])].collect()
+    assert(got.length === 20)
+    got.foreach { case (id, e) =>
+      assert(id >= 3L && e === Option(emb(id.toInt)).map(_.toSeq), s"row $id")
+    }
   }
 
   test("long IN pushdown: pushed, chunk-pruned, exact") {

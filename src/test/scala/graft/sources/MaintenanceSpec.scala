@@ -519,7 +519,7 @@ class MaintenanceSpec extends AnyFunSuite {
       StructField("tag", StringType, nullable = false)))
     val confKv = ContainerIO.confSnapshot(spark)
     def mkStream() = new GraftMicroBatchStream(d, ckpt, schema, Array.empty,
-      confKv, 128L << 20, true, Set("id"), Set("tag"), Set.empty)
+      confKv, 128L << 20, true, GraftDataSource.specsOf(schema))
     val stream = mkStream()
     var last = stream.initialOffset()
     for (w <- 0 until 100) {
@@ -601,7 +601,7 @@ class MaintenanceSpec extends AnyFunSuite {
       StructField("tag", StringType, nullable = false)))
     val confKv = ContainerIO.confSnapshot(spark)
     def mkStream() = new GraftMicroBatchStream(d, ckpt, schema, Array.empty,
-      confKv, 128L << 20, true, Set("id"), Set("tag"), Set.empty)
+      confKv, 128L << 20, true, GraftDataSource.specsOf(schema))
     val s1 = mkStream()
     val off0 = s1.initialOffset()
     Seq((1L, "a"), (2L, "b")).toDF("id", "tag").coalesce(1)
@@ -663,6 +663,44 @@ class MaintenanceSpec extends AnyFunSuite {
       finally r.close()
     }
     assert(ex.getMessage.contains("snapshot superseded"), s"got $ex")
+  }
+
+  test("a chunk index whose row count disagrees with its container fails " +
+    "every reader: DSv2 scan, engine decode, compaction") {
+    val d = tempDir("rows-mismatch")
+    graft.engine.ColumnarEngine.derive(
+      graft.engine.SourceTable.synthesize(spark, 120, 2))
+      .repartition(2)
+      .write.format("graft").option("chunkRows", "20").mode("overwrite").save(d)
+    assert(gblks(d).size === 2)
+    // the chunk detail lives in the container's commit marker (the index
+    // holds summaries only): claim one row more for its first chunk
+    val marker = java.nio.file.Paths.get(s"$d/manifests/" +
+      ContainerIO.listNames(ContainerIO.localConf(), s"$d/manifests")
+        .filter(n => n.startsWith("part-") && n.endsWith(".json")).sorted.head)
+    val json = new String(java.nio.file.Files.readAllBytes(marker), "UTF-8")
+    val chunkRows = """("offset":\d+,"length":\d+,"rows":)(\d+)""".r
+    val m = chunkRows.findFirstMatchIn(json).get
+    java.nio.file.Files.write(marker, (json.substring(0, m.start) +
+      m.group(1) + (m.group(2).toInt + 1) + json.substring(m.end))
+      .getBytes("UTF-8"))
+    java.nio.file.Files.deleteIfExists(
+      marker.getParent.resolve("." + marker.getFileName.toString + ".crc"))
+    def rowCountMismatch(t: Throwable): Boolean = t != null &&
+      ((t.isInstanceOf[IllegalArgumentException] &&
+        t.getMessage.contains("row count mismatch")) ||
+        rowCountMismatch(t.getCause))
+    val reads = Seq[(String, () => Any)](
+      "DSv2 scan" -> (() => spark.read.format("graft").load(d).collect()),
+      "engine decode" -> (() =>
+        graft.engine.ColumnarEngine.decode(spark, d).collect()),
+      "compact" -> (() => GraftMaintenance.compact(spark, d)))
+    reads.foreach { case (what, read) =>
+      val ex = intercept[Exception](read())
+      assert(rowCountMismatch(ex), s"$what: expected the row-count check, got $ex")
+    }
+    // the aborted compaction left the table as it was
+    assert(gblks(d).size === 2)
   }
 
   test("compact survives a racing consolidate that adopts its staged generation") {

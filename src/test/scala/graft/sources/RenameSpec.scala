@@ -93,6 +93,53 @@ class RenameSpec extends AnyFunSuite {
     assert(old.count() === 60)
   }
 
+  test("rename SWAP (a->t, b->a, t->b) over containers written before the " +
+    "renames: read-back, pushed filters on both names, compaction") {
+    import spark.implicits._
+    val d = java.nio.file.Files.createTempDirectory("graft-ren-swap").toString
+    // two epochs (compaction folds them) of 50-row chunks: b = 1000 + a
+    Seq(0 until 150, 150 until 300).foreach { r =>
+      r.map(i => (i.toLong, 1000L + i, s"s$i")).toDF("a", "b", "c")
+        .coalesce(1).write.format("graft").option("chunkRows", "50")
+        .mode("append").save(d)
+    }
+    GraftMaintenance.renameColumn(spark, d, "a", "t")
+    GraftMaintenance.renameColumn(spark, d, "b", "a")
+    GraftMaintenance.renameColumn(spark, d, "t", "b")
+    def chunksPlanned(df: org.apache.spark.sql.DataFrame): Int =
+      graftScan(df).planInputPartitions()
+        .map(_.asInstanceOf[GraftInputPartition].chunks.size).sum
+    def check(): Unit = {
+      val back = spark.read.format("graft").load(d)
+      assert(back.schema.fieldNames.toSeq === Seq("b", "a", "c"))
+      // the current "b" is the stored "a" and vice versa
+      assert(back.select("b", "a", "c").as[(Long, Long, String)].collect()
+        .sortBy(_._1).toSeq === (0 until 300).map(i => (i.toLong, 1000L + i, s"s$i")))
+      // pushed filters on BOTH swapped names: translated to the stored
+      // labels, chunk-pruned against their zone maps, exact
+      val fa = back.filter(col("a") >= 1250L)
+      assert(graftScan(fa).description().contains("GreaterThanOrEqual(a,1250)"),
+        graftScan(fa).description())
+      assert(fa.select("b").as[Long].collect().sorted.toSeq ===
+        (250L until 300L))
+      assert(chunksPlanned(fa) === 1)
+      val fb = back.filter(col("b") < 50L)
+      assert(graftScan(fb).description().contains("LessThan(b,50)"),
+        graftScan(fb).description())
+      assert(fb.select("a").as[Long].collect().sorted.toSeq ===
+        (1000L until 1050L))
+      assert(chunksPlanned(fb) === 1)
+      assert(back.filter(col("a").isin(1007L, 1290L)).select("b").as[Long]
+        .collect().sorted.toSeq === Seq(7L, 290L))
+      assert(back.filter(col("b").isin(7L, 290L)).select("a").as[Long]
+        .collect().sorted.toSeq === Seq(1007L, 1290L))
+    }
+    check()
+    val (consumed, produced) = GraftMaintenance.compact(spark, d)
+    assert(consumed === 2 && produced === 1)
+    check()
+  }
+
   test("rename via SQL procedure; conflicts fail controlled") {
     import spark.implicits._
     spark.conf.set("spark.sql.catalog.graft", "graft.sources.GraftCatalog")
