@@ -89,25 +89,26 @@ case class IvfLists(child: Expression, cents: Seq[Seq[Double]], nprobe: Int)
       c += 1
     }
     // partial selection of the top nprobe by (score desc, id asc) —
-    // nlist is tiny (<= a few hundred), O(nlist * nprobe) beats a sort
+    // nlist is tiny (<= a few hundred), O(nlist * nprobe) beats a sort.
+    // Consumed lists are marked NaN, which never compares greater, and
+    // each pass seeds `best` with the first unconsumed list: the
+    // selection stays total when every remaining score is -Inf (a NaN
+    // vector maps all scores there above), so a bad vector ranks lists
+    // in ascending id order and fails in the caller's exact-cosine
+    // verify with a diagnosable NaN. nprobe <= nlist, so an unconsumed
+    // list always remains.
     val out = new Array[Any](nprobe)
     var k = 0
     while (k < nprobe) {
-      var best = -1
-      var bestS = Double.NegativeInfinity
-      var q = 0
+      var best = 0
+      while (java.lang.Double.isNaN(scores(best))) best += 1
+      var bestS = scores(best)
+      var q = best + 1
       while (q < nlist) {
-        // `|| best < 0` keeps the selection total when every remaining
-        // score is -Inf (a NaN vector maps all scores there above): a bad
-        // vector then ranks lists deterministically and fails in the
-        // caller's exact-cosine verify with a diagnosable NaN, instead of
-        // throwing ArrayIndexOutOfBounds from inside codegen. For any
-        // vector with at least one finite score this picks exactly what
-        // the plain max did.
-        if (scores(q) > bestS || best < 0) { bestS = scores(q); best = q }
+        if (scores(q) > bestS) { bestS = scores(q); best = q }
         q += 1
       }
-      scores(best) = Double.NegativeInfinity // consumed
+      scores(best) = Double.NaN // consumed
       out(k) = best
       k += 1
     }

@@ -172,23 +172,8 @@ object GraftMaintenance {
           // surface the controlled conflict shape for the FNF case.
           // Fatal errors (OOM, interrupts) propagate untouched — their
           // staged leftovers are vacuum's job
-          val f = ContainerIO.fs(path, conf)
-          ContainerIO.listNames(conf, s"$path/blocks")
-            .filter(_.startsWith(s"part-compact-$runId-"))
-            .foreach(n => f.delete(
-              new org.apache.hadoop.fs.Path(s"$path/blocks/$n"), false))
-          def hasFnf(t: Throwable): Boolean =
-            t != null && (t.isInstanceOf[java.io.FileNotFoundException] ||
-              hasFnf(t.getCause))
-          if (hasFnf(e)) {
-            val c = new CompactionConflict(
-              s"a source container of $path vanished during the rewrite " +
-                "(concurrent overwrite/compaction); compaction aborted, " +
-                "staged output removed")
-            c.initCause(e)
-            throw c
-          }
-          throw e
+          sweepStaged(conf, path, s"part-compact-$runId-")
+          throw vanishedOr(e, path, "the rewrite", "compaction")
       }
 
     beforeCommit()
@@ -292,10 +277,14 @@ object GraftMaintenance {
     * containers that provably hold no match are never touched — their
     * manifests, stats, and files stay byte-identical.
     *
-    * Rewrite: one Spark task per affected container streams its chunks
-    * (CRC + digest verified) through the compaction re-encoder, dropping
-    * rows the bound predicate matches. A container where nothing matched
-    * keeps its ORIGINAL manifest (the staged rewrite is discarded); a
+    * Rewrite: one Spark task per affected container first PROBES it —
+    * streams only the columns the predicate reads (every block read
+    * CRC-verified) and stops at the first matching row. A container
+    * where nothing matches keeps its ORIGINAL manifest and file, and no
+    * staged file is ever written for it (its unread blocks go unverified,
+    * the same contract as a column-pruned scan). A container with a
+    * match streams its chunks (CRC + digest verified) through the
+    * compaction re-encoder, dropping rows the bound predicate matches; a
     * fully-deleted container becomes a zero-row TOMBSTONE manifest (no
     * block file) so its epoch stays ancestor-covered — an epoch replay
     * or listing-fallback recovery can never resurrect the deleted rows.
@@ -398,26 +387,22 @@ object GraftMaintenance {
         .map { case (m0, bin) =>
           val c2 = ContainerIO.confFrom(confKv)
           val m = Manifests.loadChunkIndex(c2, path, m0)
-          val storedChain: Seq[(String, Int)] =
-            if (m.schemaCols.isEmpty)
-              ColumnarEngine.DefaultSchema.map(s => (s.name, s.packed))
-            else m.schemaCols
-          val schema = storedChain.map { case (n, k) =>
-            ColumnSpec.fromPacked(n, k) }
+          val storedChain = storedChainOf(m)
           // the matcher's ordinals are VISIBLE positions; the covered
           // ones form a prefix (full positions are ascending)
           val containerCols = visPositions
             .takeWhile(_ < storedChain.size).map(storedChain)
           val matcher = new StoredRowMatcher(bound, containerCols, width)
-          val (pm, dropped) = rewriteBin(c2, path, Seq(m), schema,
-            m.digestCol, s"delete-$runId-$bin", bin, drop = matcher)
-          if (dropped == 0L) {
-            // nothing matched here (admission over-approximates):
-            // discard the staged rewrite, the original stays committed
-            ContainerIO.fs(path, c2).delete(new org.apache.hadoop.fs.Path(
-              s"$path/blocks/part-${pm.name}.gblk"), false)
+          // admission over-approximates: a container without a match
+          // stays committed as it is, with nothing staged for it
+          if (!anyMatch(c2, path, m, matcher)) (m.name, null: PartManifest, 0L)
+          else {
+            val schema = storedChain.map { case (n, k) =>
+              ColumnSpec.fromPacked(n, k) }
+            val (pm, dropped) = rewriteBin(c2, path, Seq(m), schema,
+              m.digestCol, s"delete-$runId-$bin", bin, drop = matcher)
+            (m.name, pm, dropped)
           }
-          (m.name, pm, dropped)
         }
         .collect()
       catch {
@@ -425,23 +410,8 @@ object GraftMaintenance {
           // same failure discipline as compact: sweep THIS run's staged
           // containers; surface a vanished source as the controlled
           // conflict shape
-          val f = ContainerIO.fs(path, conf)
-          ContainerIO.listNames(conf, s"$path/blocks")
-            .filter(_.startsWith(s"part-delete-$runId-"))
-            .foreach(n => f.delete(
-              new org.apache.hadoop.fs.Path(s"$path/blocks/$n"), false))
-          def hasFnf(t: Throwable): Boolean =
-            t != null && (t.isInstanceOf[java.io.FileNotFoundException] ||
-              hasFnf(t.getCause))
-          if (hasFnf(e)) {
-            val c = new CompactionConflict(
-              s"a source container of $path vanished during the delete " +
-                "rewrite (concurrent overwrite/compaction); delete " +
-                "aborted, staged output removed")
-            c.initCause(e)
-            throw c
-          }
-          throw e
+          sweepStaged(conf, path, s"part-delete-$runId-")
+          throw vanishedOr(e, path, "the delete rewrite", "delete")
       }
     val changed = outs.filter(_._3 > 0L)
     if (changed.isEmpty) return 0L
@@ -460,10 +430,12 @@ object GraftMaintenance {
     * prunes via the same scan admission as [[delete]]; affected
     * containers rewrite 1:1 at the table's CURRENT schema width (a
     * container predating an added column null-fills it, so an UPDATE can
-    * backfill added columns); zero-match rewrites are discarded; the
-    * swap is one OCC commit with DELETE's concurrency story (appends
-    * survive, replaces abort, retained snapshots keep the pre-update
-    * rows, epoch replays substitute the updated generation).
+    * backfill added columns); like DELETE, each admitted container is
+    * first probed on the predicate's columns alone, and one without a
+    * match is never rewritten or staged; the swap is one OCC commit with
+    * DELETE's concurrency story (appends survive, replaces abort,
+    * retained snapshots keep the pre-update rows, epoch replays
+    * substitute the updated generation).
     *
     * Updating a partition-transform source column drops that container's
     * partitioning metadata (recorded bucket-id admission would otherwise
@@ -549,42 +521,23 @@ object GraftMaintenance {
         .map { case (m0, bin) =>
           val c2 = ContainerIO.confFrom(confKv)
           val m = Manifests.loadChunkIndex(c2, path, m0)
-          val storedChain: Seq[(String, Int)] =
-            if (m.schemaCols.isEmpty)
-              ColumnarEngine.DefaultSchema.map(s => (s.name, s.packed))
-            else m.schemaCols
+          val storedChain = storedChainOf(m)
           val containerCols = visPositions
             .takeWhile(_ < storedChain.size).map(storedChain)
           val matcher = new StoredRowMatcher(cond, containerCols, width)
-          val (pm, updated) = rewriteUpdate(c2, path, m, chainCols,
-            visPositions, matcher, boundAssigns, targetOrds,
-            s"update-$runId-$bin", bin)
-          if (updated == 0L) {
-            ContainerIO.fs(path, c2).delete(new org.apache.hadoop.fs.Path(
-              s"$path/blocks/part-${pm.name}.gblk"), false)
+          if (!anyMatch(c2, path, m, matcher)) (m.name, null: PartManifest, 0L)
+          else {
+            val (pm, updated) = rewriteUpdate(c2, path, m, chainCols,
+              visPositions, matcher, boundAssigns, targetOrds,
+              s"update-$runId-$bin", bin)
+            (m.name, pm, updated)
           }
-          (m.name, pm, updated)
         }
         .collect()
       catch {
         case scala.util.control.NonFatal(e) =>
-          val f = ContainerIO.fs(path, conf)
-          ContainerIO.listNames(conf, s"$path/blocks")
-            .filter(_.startsWith(s"part-update-$runId-"))
-            .foreach(n => f.delete(
-              new org.apache.hadoop.fs.Path(s"$path/blocks/$n"), false))
-          def hasFnf(t: Throwable): Boolean =
-            t != null && (t.isInstanceOf[java.io.FileNotFoundException] ||
-              hasFnf(t.getCause))
-          if (hasFnf(e)) {
-            val c = new CompactionConflict(
-              s"a source container of $path vanished during the update " +
-                "rewrite (concurrent overwrite/compaction); update " +
-                "aborted, staged output removed")
-            c.initCause(e)
-            throw c
-          }
-          throw e
+          sweepStaged(conf, path, s"part-update-$runId-")
+          throw vanishedOr(e, path, "the update rewrite", "update")
       }
     val changed = outs.filter(_._3 > 0L)
     if (changed.isEmpty) return 0L
@@ -607,8 +560,10 @@ object GraftMaintenance {
     * common dimension/correction-feed case; a shuffle-join rewrite for
     * arbitrarily large sources is future engine surface). Containers
     * that MAY hold a key (per-column IN admission over zone maps /
-    * bucket facts, when the key set is ≤ 4096) rewrite 1:1 dropping the
-    * matched rows; the source itself stages as fresh containers through
+    * bucket facts, when the key set is ≤ 4096) are probed on their key
+    * columns alone; those holding a key rewrite 1:1 dropping the matched
+    * rows, the others are never rewritten or staged (DELETE's probe);
+    * the source itself stages as fresh containers through
     * the ordinary write machinery; ONE OCC swap publishes rewrites +
     * appends together — readers never see a state with both (or
     * neither) version of a key. Concurrency, retention, and replay
@@ -775,14 +730,6 @@ object GraftMaintenance {
       if (f != null)
         try scala.concurrent.Await.ready(f, scala.concurrent.duration.Duration.Inf)
         catch { case scala.util.control.NonFatal(_) => () }
-    def sweepStaged(): Unit = {
-      val f = ContainerIO.fs(path, conf)
-      ContainerIO.listNames(conf, s"$path/blocks")
-        .filter(n => n.startsWith(s"part-$epoch-") ||
-          n.startsWith(s"part-merge-$runId-"))
-        .foreach(n => f.delete(
-          new org.apache.hadoop.fs.Path(s"$path/blocks/$n"), false))
-    }
     var appendedF: scala.concurrent.Future[Array[PartManifest]] = null
     try {
       // 1) stage the source as fresh containers (attempt-qualified, one
@@ -823,26 +770,20 @@ object GraftMaintenance {
           .map { case (m0, bin) =>
             val c2 = ContainerIO.confFrom(confKv)
             val m = Manifests.loadChunkIndex(c2, path, m0)
-            val storedChain: Seq[(String, Int)] =
-              if (m.schemaCols.isEmpty)
-                ColumnarEngine.DefaultSchema.map(s => (s.name, s.packed))
-              else m.schemaCols
+            val storedChain = storedChainOf(m)
             val keyFull = keyVisSer.map(visPosSer)
-            if (keyFull.exists(_ >= storedChain.size))
-              // the container predates a key column: all-null keys,
-              // nothing can match
+            // a container predating a key column has all-null keys, so
+            // nothing can match
+            lazy val matcher = new StoredKeyMatcher(
+              keyFull.map(storedChain), keySetB.value)
+            if (keyFull.exists(_ >= storedChain.size) ||
+                !anyMatch(c2, path, m, matcher))
               (m.name, null: PartManifest, 0L)
             else {
               val schema = storedChain.map { case (n, k) =>
                 ColumnSpec.fromPacked(n, k) }
-              val matcher = new StoredKeyMatcher(
-                keyFull.map(storedChain), keySetB.value)
               val (pm, dropped) = rewriteBin(c2, path, Seq(m), schema,
                 m.digestCol, s"merge-$runId-$bin", bin, drop = matcher)
-              if (dropped == 0L) {
-                ContainerIO.fs(path, c2).delete(new org.apache.hadoop.fs.Path(
-                  s"$path/blocks/part-${pm.name}.gblk"), false)
-              }
               (m.name, pm, dropped)
             }
           }.collect()
@@ -859,28 +800,13 @@ object GraftMaintenance {
         reclaimConsumed = false, afterStage = () => ())
       (changed.map(_._3).sum, appended.map(_.rows).sum)
     } catch {
-      case e: CompactionConflict =>
+      case scala.util.control.NonFatal(e) =>
         // rewrite-side conflicts sweep their own staging, but the
         // CONCURRENT source staging may still be landing containers:
         // drain it, then sweep (idempotent) so nothing survives the abort
         drainQuietly(appendedF)
-        sweepStaged()
-        throw e
-      case scala.util.control.NonFatal(e) =>
-        drainQuietly(appendedF)
-        sweepStaged()
-        def hasFnf(t: Throwable): Boolean =
-          t != null && (t.isInstanceOf[java.io.FileNotFoundException] ||
-            hasFnf(t.getCause))
-        if (hasFnf(e)) {
-          val c = new CompactionConflict(
-            s"a source container of $path vanished during the upsert " +
-              "rewrite (concurrent overwrite/compaction); upsert aborted, " +
-              "staged output removed")
-          c.initCause(e)
-          throw c
-        }
-        throw e
+        sweepStaged(conf, path, s"part-$epoch-", s"part-merge-$runId-")
+        throw vanishedOr(e, path, "the upsert rewrite", "upsert")
     } finally keySetB.destroy()
   }
 
@@ -939,14 +865,8 @@ object GraftMaintenance {
       !m.partitioning.exists(p => targetStored.exists(t =>
         p.contains(s"($t)") || p.contains(s",$t)")))
     var updated = 0L
-    val file = m.blockFile(path)
-    val fs = ContainerIO.fs(file, conf)
-    val p = new org.apache.hadoop.fs.Path(file)
-    val fileLen = fs.getFileStatus(p).getLen
-    val in = fs.open(p)
-    try {
-      ContainerFormat.readChunks(in, fileLen, file,
-          m.chunkIndex.map(ChunkSpec.of), live, m.digestCol).foreach { chunk =>
+    withChunks(conf, path, m, live, m.digestCol) { chunks =>
+      chunks.foreach { chunk =>
         var j = 0
         while (j < chunk.rows) {
           val row = matcher.buildRow(chunk, j)
@@ -1014,7 +934,7 @@ object GraftMaintenance {
           j += 1
         }
       }
-    } finally in.close()
+    }
     (enc.finish(publishManifest = false).copy(ancestors = ancestors,
       partitioning = if (keepPart) m.partitioning else Nil,
       bucketIds =
@@ -1326,6 +1246,79 @@ object GraftMaintenance {
       ContainerIO.confFrom(ContainerIO.confSnapshot(spark)), path,
       retainLast, olderThanMs)
 
+  /** A container's stored (name, packed kind) chain; legacy manifests
+    * without one hold the default schema.
+    */
+  private def storedChainOf(m: ParsedManifest): Seq[(String, Int)] =
+    if (m.schemaCols.isEmpty)
+      ColumnarEngine.DefaultSchema.map(s => (s.name, s.packed))
+    else m.schemaCols
+
+  /** Open container `m` and hand `f` its chunks, decoding `columns`
+    * (see [[ContainerFormat.readChunks]]); the file is closed when `f`
+    * returns. A vanished container raises FileNotFoundException.
+    */
+  private def withChunks[T](conf: org.apache.hadoop.conf.Configuration,
+                            path: String, m: ParsedManifest,
+                            columns: Seq[(String, Int)], digestCol: String)(
+                            f: Iterator[graft.engine.DecodedChunk] => T): T = {
+    val file = m.blockFile(path)
+    val fs = ContainerIO.fs(file, conf)
+    val p = new org.apache.hadoop.fs.Path(file)
+    val fileLen = fs.getFileStatus(p).getLen
+    val in = fs.open(p)
+    try f(ContainerFormat.readChunks(in, fileLen, file,
+      m.chunkIndex.map(ChunkSpec.of), columns, digestCol))
+    finally in.close()
+  }
+
+  /** Does any row of container `m` match `drop`? The copy-on-write
+    * probe: streams only `drop.columns` (every block read CRC-verified;
+    * no content digest, since the probe need not read the digest
+    * column) and stops at the first matching row.
+    */
+  private def anyMatch(conf: org.apache.hadoop.conf.Configuration,
+                       path: String, m: ParsedManifest,
+                       drop: RowDropper): Boolean =
+    withChunks(conf, path, m, drop.columns, digestCol = "")(_.exists { chunk =>
+      var j = 0
+      while (j < chunk.rows && !drop.matches(chunk, j)) j += 1
+      j < chunk.rows
+    })
+
+  /** Delete the staged block files of one maintenance run: every name
+    * under `blocks/` that starts with one of `prefixes`.
+    */
+  private def sweepStaged(conf: org.apache.hadoop.conf.Configuration,
+                          path: String, prefixes: String*): Unit = {
+    val f = ContainerIO.fs(path, conf)
+    ContainerIO.listNames(conf, s"$path/blocks")
+      .filter(n => prefixes.exists(n.startsWith))
+      .foreach(n => f.delete(
+        new org.apache.hadoop.fs.Path(s"$path/blocks/$n"), false))
+  }
+
+  /** The error a failed rewrite job surfaces: a FileNotFoundException
+    * anywhere in `e`'s cause chain (a concurrent overwrite/compaction
+    * deleted a source container mid-read) becomes the controlled
+    * [[CompactionConflict]]; anything else is returned as it is.
+    */
+  private def vanishedOr(e: Throwable, path: String, during: String,
+                         op: String): Throwable = {
+    def hasFnf(t: Throwable): Boolean =
+      t != null && (t.isInstanceOf[java.io.FileNotFoundException] ||
+        hasFnf(t.getCause))
+    if (!hasFnf(e)) e
+    else {
+      val c = new CompactionConflict(
+        s"a source container of $path vanished during $during " +
+          s"(concurrent overwrite/compaction); $op aborted, " +
+          "staged output removed")
+      c.initCause(e)
+      c
+    }
+  }
+
   /** Stream one bin's containers chunk-by-chunk (CRC + digest verified)
     * into a fresh encoder under an unpublished manifest. Task memory is
     * bounded by one decoded chunk plus one encoder chunk buffer.
@@ -1367,14 +1360,8 @@ object GraftMaintenance {
     val fltNulls = if (anyNullable) new Array[Boolean](fltNames.length) else null
     var dropped = 0L
     ms.foreach { m =>
-      val file = m.blockFile(path)
-      val fs = ContainerIO.fs(file, conf)
-      val p = new org.apache.hadoop.fs.Path(file)
-      val fileLen = fs.getFileStatus(p).getLen
-      val in = fs.open(p)
-      try {
-        ContainerFormat.readChunks(in, fileLen, file,
-            m.chunkIndex.map(ChunkSpec.of), live, digestCol).foreach { chunk =>
+      withChunks(conf, path, m, live, digestCol) { chunks =>
+        chunks.foreach { chunk =>
           val strValues = strNames.map(n => chunk.strs.get(n).strings)
           var j = 0
           while (j < chunk.rows) {
@@ -1426,7 +1413,7 @@ object GraftMaintenance {
             }
           }
         }
-      } finally in.close()
+      }
     }
     // partition-transform metadata survives compaction CONSERVATIVELY:
     // identical declared transforms across all sources are kept, and a
@@ -1449,9 +1436,13 @@ object GraftMaintenance {
 
 /** A row-removal decision over decoded stored rows — the hook
   * [[GraftMaintenance]]'s rewrite streams matched rows through
-  * (predicate DELETE, key-set upsert).
+  * (predicate DELETE, key-set upsert). `matches` reads only `columns`,
+  * so the copy-on-write probe decodes just those to find out whether a
+  * container holds any match before it is rewritten at all.
   */
 private[sources] trait RowDropper extends Serializable {
+  /** The (stored name, kind) pairs `matches` reads. */
+  def columns: Seq[(String, Int)]
   def matches(chunk: graft.engine.DecodedChunk, j: Int): Boolean
 }
 
@@ -1463,6 +1454,9 @@ private[sources] trait RowDropper extends Serializable {
 private[sources] final class StoredKeyMatcher(
     keyCols: Seq[(String, Int)], keySet: Set[Seq[Any]]) extends RowDropper {
   import graft.engine.DecodedChunk
+
+  val columns: Seq[(String, Int)] = keyCols.map { case (n, packed) =>
+    (n, graft.engine.ColumnSpec.fromPacked(n, packed).kind) }
 
   @transient private lazy val getters: Array[(DecodedChunk, Int) => Any] =
     keyCols.toArray.map { case (n0, packed) =>
@@ -1502,12 +1496,25 @@ private[sources] final class StoredKeyMatcher(
   * past the container's width (add-only evolution) stay null, matching
   * the reader's null-fill. Ships to tasks with the bound expression;
   * the generated predicate and per-column getters build lazily on the
-  * executor.
+  * executor. `matches` fills only the ordinals the predicate references
+  * (the other positions stay null, and the predicate cannot read them),
+  * so `columns` — the container columns at those ordinals — is all a
+  * chunk needs to carry for it.
   */
 private[sources] final class StoredRowMatcher(
     bound: org.apache.spark.sql.catalyst.expressions.Expression,
     containerCols: Seq[(String, Int)], width: Int) extends RowDropper {
   import graft.engine.DecodedChunk
+
+  /** Covered ordinals the bound predicate reads, ascending. */
+  private val predOrds: Array[Int] = bound.collect {
+    case b: org.apache.spark.sql.catalyst.expressions.BoundReference => b.ordinal
+  }.distinct.filter(_ < containerCols.size).sorted.toArray
+
+  val columns: Seq[(String, Int)] = predOrds.toSeq.map { o =>
+    val (n, packed) = containerCols(o)
+    (n, graft.engine.ColumnSpec.fromPacked(n, packed).kind)
+  }
 
   @transient private lazy val pred = {
     val p = org.apache.spark.sql.catalyst.expressions.Predicate.create(bound)
@@ -1560,8 +1567,17 @@ private[sources] final class StoredRowMatcher(
     row
   }
 
-  def matches(chunk: DecodedChunk, j: Int): Boolean =
-    pred.eval(buildRow(chunk, j))
+  def matches(chunk: DecodedChunk, j: Int): Boolean = {
+    val row = new org.apache.spark.sql.catalyst.expressions
+      .GenericInternalRow(width)
+    var i = 0
+    while (i < predOrds.length) {
+      val o = predOrds(i)
+      row.update(o, getters(o)(chunk, j))
+      i += 1
+    }
+    pred.eval(row)
+  }
 
   def matchesRow(row: org.apache.spark.sql.catalyst.InternalRow): Boolean =
     pred.eval(row)

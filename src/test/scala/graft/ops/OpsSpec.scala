@@ -242,6 +242,22 @@ class OpsSpec extends AnyFunSuite {
     }
   }
 
+  test("ivf_lists: a vector whose scores are all -Inf ranks nprobe " +
+    "distinct lists in ascending id order") {
+    // a NaN component scores every list -Inf; an infinite one against
+    // all-negative centroids does too
+    val cents: Seq[Seq[Double]] = (1 to 5).map(i => Seq(-i.toDouble, 0.5))
+    val vecs = Seq(Seq(Double.NaN, 1.0), Seq(Double.PositiveInfinity, 0.0))
+      .toDF("v")
+    graft.functions.IvfLists.register(spark)
+    for (nprobe <- Seq(1, 3, 5)) {
+      val got = vecs
+        .select(graft.functions.IvfLists.ivfLists(col("v"), cents, nprobe))
+        .collect().map(_.getSeq[Int](0))
+      got.foreach(ids => assert(ids === (0 until nprobe), s"nprobe=$nprobe"))
+    }
+  }
+
   test("approximate ANN/near-dup recall is QUANTIFIED against the exact answers") {
     import org.apache.spark.sql.DataFrame
     val emb = spark.read.parquet("/root/testdata/sf0.01/embeddings.parquet")
